@@ -8,14 +8,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import built_once
+
 
 def with_dup_rank(df: DataFrame, key: str = "phash",
                   order: str = "image_id") -> DataFrame:
     """O-23: row_number over phash; rank > 1 == duplicate.  One
     shuffle on `key`; rows must already be pruned of heavy payload
     columns before this point (pipeline drops `bytes` first)."""
-    w = Window.partitionBy(key).orderBy(order)
-    return df.withColumn("dup_rank", F.row_number().over(w))
+    rank = built_once(
+        df.sparkSession.sparkContext, ("dup_rank", key, order),
+        lambda: F.row_number().over(Window.partitionBy(key).orderBy(order)))
+    return df.withColumn("dup_rank", rank)
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -793,7 +797,6 @@ def phash_band_table(df: DataFrame, max_hamming: int = 3,
     src = (df.select(F.col(id_col).alias("__id"),
                      F.col(phash_col).alias("__ph"))
            .filter(F.col("__ph").isNotNull()))
-    two = two_level or hybrid
 
     def sub_structs(b: int, lo: int, hi: int, bv, band_off: int) -> list:
         out = []

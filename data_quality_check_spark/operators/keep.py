@@ -8,6 +8,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..constants import RULE_ORDER
+from ..functions import built_once
 
 # flag column naming convention: f"bad_{rule_name}"
 
@@ -16,11 +17,7 @@ def flag_col(rule: str) -> str:
     return f"bad_{rule}"
 
 
-def with_keep(df: DataFrame) -> DataFrame:
-    """Requires one boolean column per rule in RULE_ORDER (null-safe:
-    null flags are treated as violations = conservative drop).
-    Emits drop_reasons (names), keep, and the compact rule_flags
-    bitmask (bit i = RULE_ORDER[i] violated — SURVEY §1.2)."""
+def _keep_columns() -> tuple[Column, Column]:
     reason_arr = F.array(*[
         F.when(F.coalesce(F.col(flag_col(r)), F.lit(True)), F.lit(r))
         for r in RULE_ORDER
@@ -31,8 +28,18 @@ def with_keep(df: DataFrame) -> DataFrame:
         bitmask = bitmask + F.when(
             F.coalesce(F.col(flag_col(r)), F.lit(True)), F.lit(1 << i)
         ).otherwise(F.lit(0))
+    return reasons, bitmask.cast("int")
+
+
+def with_keep(df: DataFrame) -> DataFrame:
+    """Requires one boolean column per rule in RULE_ORDER (null-safe:
+    null flags are treated as violations = conservative drop).
+    Emits drop_reasons (names), keep, and the compact rule_flags
+    bitmask (bit i = RULE_ORDER[i] violated — SURVEY §1.2)."""
+    reasons, bitmask = built_once(df.sparkSession.sparkContext,
+                                  "with_keep", _keep_columns)
     return (
         df.withColumn("drop_reasons", reasons)
-        .withColumn("rule_flags", bitmask.cast("int"))
+        .withColumn("rule_flags", bitmask)
         .withColumn("keep", F.size("drop_reasons") == 0)
     )

@@ -3,24 +3,29 @@ BASELINE.json:14 "resumes from per-partition checkpoints", "every
 partition writes lineage + rule-hit metrics to an ... audit table").
 
 Commit protocol per wave of buckets:
-  1. results partitions written via idempotent dynamic-partition
-     overwrite (crash => partial files are replaced on rerun),
+  1. results written via the catalog's idempotent per-key overwrite:
+     one file per task, sorted by (bucket, image_id), the wave's
+     buckets replaced copy-on-write at the manifest commit (crash =>
+     the rerun replaces the same buckets again),
   2. audit rows appended (lineage + rule-hit metrics per bucket),
+     computed by re-reading (1) from disk and checked against what
+     the write action observed,
   3. ledger rows appended LAST — the ledger row is the commit point.
 Resume = anti-join of all buckets against ledger 'done' rows; a crash
 between (1) and (3) simply reruns the wave, overwriting the same
-partitions.  Wave size bounds the work lost to a failure.
+buckets.  Wave size bounds the work lost to a failure.
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import N_BUCKETS, RULE_ORDER
-from ..operators.salt import detect_hot_buckets, salted_repartition
+from ..functions import built_once
+from ..operators.salt import bucket_expr, detect_hot_buckets, salted_repartition
 from .catalog import Catalog
 from .pipeline import RESULT_COLUMNS, quality_frame
 
@@ -32,6 +37,25 @@ _AUDIT_NON_MAP = [
     "run_id", "bucket", "n_rows", "n_keep", "input_fingerprint",
     "app_id", "attempt", "code_version", "wall_ms",
 ]
+
+
+def _audit_columns() -> tuple[list[Column], Column]:
+    """Per-bucket audit aggregates (counts, per-rule hits from
+    drop_reasons, an order-insensitive bit_xor(xxhash64) input
+    fingerprint) and the rule_hits map over them."""
+    aggs = [
+        F.count("*").alias("n_rows"),
+        F.sum(F.col("keep").cast("long")).alias("n_keep"),
+        *[F.sum(F.array_contains("drop_reasons", r).cast("long"))
+          .alias(f"hits_{r}") for r in RULE_ORDER],
+        F.expr("bit_xor(xxhash64(image_id))").cast("string")
+        .alias("input_fingerprint"),
+    ]
+    rule_hits = F.map_from_arrays(
+        F.array(*[F.lit(r) for r in RULE_ORDER]),
+        F.array(*[F.col(f"hits_{r}") for r in RULE_ORDER]),
+    ).alias("rule_hits")
+    return aggs, rule_hits
 
 
 def done_buckets(catalog: Catalog, run_key: str) -> list[int]:
@@ -74,9 +98,9 @@ def run(spark: SparkSession, catalog: Catalog, images: DataFrame,
     buckets: restrict this invocation to a subset of bucket ids (it
     still skips already-committed ones) — the multi-executor story:
     K processes over disjoint ranges against ONE catalog, each wave
-    commit independent (results = per-bucket dynamic partition
-    overwrite, audit/ledger = unique-file driver-side appends, so
-    concurrent commits never share a staging dir).
+    commit independent (results = per-bucket overwrite staged in a
+    private dir and committed under the table lock, audit/ledger =
+    unique-file driver-side appends).
     """
     t0 = time.time()
     pending = pending_buckets(spark, catalog, run_key, n_buckets)
@@ -111,16 +135,15 @@ def run(spark: SparkSession, catalog: Catalog, images: DataFrame,
         # bucket, so per-wave frames are row-identical to the old
         # post-verdict filter.
         if len(wave) < n_buckets:
-            bexpr = (F.pmod(F.coalesce(F.col("phash"), F.lit(0)),
-                            F.lit(n_buckets)).cast("int"))
-            src = images.filter(bexpr.isin([int(b) for b in wave]))
+            src = images.filter(
+                bucket_expr("phash", n_buckets).isin([int(b) for b in wave]))
         else:
             src = images
         wave_df = quality_frame(src, n_buckets=n_buckets)
         wave_df = salted_repartition(wave_df, nparts,
                                      [b for b in hot if b in set(wave)])
 
-        # 1. results (idempotent dynamic partition overwrite) — the
+        # 1. results (idempotent per-bucket overwrite) — the
         #    ONE action that executes the UDF pipeline; nothing is
         #    persisted (at 10^12 rows a cache would just spill).
         #    Observation metrics ride the write action for free (no
@@ -129,7 +152,7 @@ def run(spark: SparkSession, catalog: Catalog, images: DataFrame,
         obs = Observation(f"wave-{wi}")
         to_write = (
             wave_df.select(*RESULT_COLUMNS)
-            .sortWithinPartitions("image_id")
+            .sortWithinPartitions("bucket", "image_id")
             .observe(obs,
                      F.count(F.lit(1)).alias("n_rows"),
                      F.sum(F.col("keep").cast("long")).alias("n_keep"))
@@ -137,31 +160,21 @@ def run(spark: SparkSession, catalog: Catalog, images: DataFrame,
         catalog.overwrite_partitions(RESULTS_TABLE, to_write, ["bucket"])
         observed = obs.get  # blocks until the write action finishes
 
-        # 2. audit from the *written* results partitions (columnar
+        # 2. audit from the *written* results files (columnar
         #    read of 4 small columns; never recomputes the UDFs):
         #    counts + per-rule hits from drop_reasons + an
         #    order-insensitive bit_xor(xxhash64) input fingerprint
         written = catalog.read_table(RESULTS_TABLE).filter(
             F.col("bucket").isin([int(b) for b in wave]))
         wall_ms = int((time.time() - wt0) * 1000)
+        aggs, rule_hits = built_once(spark.sparkContext, "audit", _audit_columns)
         audit = (
             written.select("bucket", "image_id", "keep", "drop_reasons")
             .groupBy("bucket")
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.sum(F.col("keep").cast("long")).alias("n_keep"),
-                *[F.sum(F.array_contains("drop_reasons", r).cast("long"))
-                  .alias(f"hits_{r}") for r in RULE_ORDER],
-                F.expr("bit_xor(xxhash64(image_id))").cast("string")
-                .alias("input_fingerprint"),
-            )
+            .agg(*aggs)
             .select(
                 F.lit(run_id).alias("run_id"),
-                "bucket", "n_rows", "n_keep",
-                F.map_from_arrays(
-                    F.array(*[F.lit(r) for r in RULE_ORDER]),
-                    F.array(*[F.col(f"hits_{r}") for r in RULE_ORDER]),
-                ).alias("rule_hits"),
+                "bucket", "n_rows", "n_keep", rule_hits,
                 "input_fingerprint",
                 F.lit(app_id).alias("app_id"),
                 F.lit(0).alias("attempt"),

@@ -42,11 +42,12 @@ from ..constants import (
     RULE_TOXIC,
     LANG_UND,
 )
+from ..functions import built_once
 from ..functions import rules as R
 from ..functions.udfs import pipeline_udf, text_udf
 from ..operators.dedup import with_dup_rank
 from ..operators.keep import flag_col, with_keep
-from ..operators.salt import with_bucket
+from ..operators.salt import bucket_expr
 
 RESULT_COLUMNS = [
     "image_id", "bucket", "lang", "lang_conf", "ppl",
@@ -55,40 +56,32 @@ RESULT_COLUMNS = [
 ]
 
 
-def enrich(images: DataFrame, n_buckets: int = N_BUCKETS,
-           with_decode: bool = True) -> DataFrame:
-    """Stages 2-4: flags + UDF outputs; no shuffle introduced.
+_FLAG_RULES = (RULE_TOO_SHORT, RULE_TOO_LONG, RULE_REPETITION,
+               RULE_STOPWORD, RULE_SYMBOL)
 
-    Returns a payload-free frame (bytes dropped after the decode UDF).
-    """
+
+def _enrich_columns(n_buckets: int, with_decode: bool) -> tuple[list, list]:
+    """enrich's two selects: bucket + flags + UDF call, then the UDF
+    struct flattened."""
     cap = R.caption_norm(F.col("caption"))
     toks = R.tokens(cap)
-
-    df = with_bucket(images, n_buckets=n_buckets)
-    df = df.withColumn(
-        flag_col(RULE_NULL),
-        R.null_fields_bad({c: F.col(c) for c in
-                           ("image_id", "caption", "bytes", "w", "h", "phash")}),
-    )
+    null_flag = R.null_fields_bad(
+        {c: F.col(c) for c in ("image_id", "caption", "bytes", "w", "h", "phash")})
 
     if with_decode:
         # one fused ArrowEvalPython stage: text models + decode in a
         # single Python worker per task
-        udf_cols = [pipeline_udf(
-            F.col("caption"), "bytes", "fmt", "w", "h", "phash").alias("txt")]
+        txt = pipeline_udf(F.col("caption"), "bytes", "fmt", "w", "h", "phash")
     else:
-        udf_cols = [text_udf(F.col("caption")).alias("txt")]
+        txt = text_udf(F.col("caption"))
 
-    df = df.select(
-        "image_id", "bucket", "phash", "fmt", "w", "h",
-        F.col(flag_col(RULE_NULL)),
-        R.too_short_bad(cap).alias(flag_col(RULE_TOO_SHORT)),
-        R.too_long_bad(cap).alias(flag_col(RULE_TOO_LONG)),
-        R.repetition_bad(toks).alias(flag_col(RULE_REPETITION)),
-        R.stopword_bad(toks).alias(flag_col(RULE_STOPWORD)),
-        R.symbol_bad(cap).alias(flag_col(RULE_SYMBOL)),
-        *udf_cols,
-    )
+    rule_flags = dict(zip(_FLAG_RULES, (
+        R.too_short_bad(cap), R.too_long_bad(cap), R.repetition_bad(toks),
+        R.stopword_bad(toks), R.symbol_bad(cap))))
+    first = ["image_id", bucket_expr("phash", n_buckets).alias("bucket"),
+             "phash", "fmt", "w", "h", null_flag.alias(flag_col(RULE_NULL)),
+             *[c.alias(flag_col(r)) for r, c in rule_flags.items()],
+             txt.alias("txt")]
 
     flat = [
         F.col("txt.lang").alias("lang"),
@@ -113,8 +106,21 @@ def enrich(images: DataFrame, n_buckets: int = N_BUCKETS,
                & (F.col("txt.psnr_db") >= MIN_PSNR_DB))
              ).alias(flag_col(RULE_PIXEL)),
         ]
-    keep_cols = [c for c in df.columns if c != "txt"]
-    return df.select(*keep_cols, *flat)
+    second = ["image_id", "bucket", "phash", "fmt", "w", "h",
+              *[flag_col(r) for r in (RULE_NULL, *_FLAG_RULES)], *flat]
+    return first, second
+
+
+def enrich(images: DataFrame, n_buckets: int = N_BUCKETS,
+           with_decode: bool = True) -> DataFrame:
+    """Stages 2-4: flags + UDF outputs; no shuffle introduced.
+
+    Returns a payload-free frame (bytes dropped after the decode UDF).
+    """
+    first, second = built_once(
+        images.sparkSession.sparkContext, ("enrich", n_buckets, with_decode),
+        lambda: _enrich_columns(n_buckets, with_decode))
+    return images.select(*first).select(*second)
 
 
 def decide(enriched: DataFrame) -> DataFrame:

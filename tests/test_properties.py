@@ -152,3 +152,28 @@ def test_rawq_roundtrip_properties(seed, version):
     p2 = codecs.psnr_db(codecs.decode_rawq(b2 := codecs.encode_rawq(pix, 2), w, h),
                         codecs.decode_rawq_ref(b2, w, h))
     assert p1 > p2
+
+
+def test_bucket_expr_pins_with_bucket(spark):
+    """The checkpoint's scan-side wave filter and the verdict frame's
+    bucket column share operators.salt.bucket_expr: equal for null,
+    negative and extreme phash, and equal to pmod(coalesce(phash, 0))."""
+    from pyspark.sql import functions as F
+
+    from data_quality_check_spark.operators.salt import bucket_expr, with_bucket
+
+    vals = [None, 0, 1, -1, -64, -65, 63, 64, 2**62, 2**63 - 1, -(2**63),
+            -(2**63) + 1]
+    df = spark.createDataFrame([(v,) for v in vals], "phash long")
+    for n in (1, 7, 64):
+        got = (with_bucket(df, n_buckets=n)
+               .select("phash", "bucket",
+                       bucket_expr("phash", n).alias("filter_bucket"))
+               .collect())
+        for r in got:
+            assert r.bucket == r.filter_bucket == (r.phash or 0) % n, (n, r)
+        wave = [b for b in range(n) if b % 2 == 0]
+        kept = (df.filter(bucket_expr("phash", n).isin(wave))
+                .select(F.coalesce("phash", F.lit(0)).alias("p")).collect())
+        assert sorted(r.p for r in kept) == sorted(
+            (v or 0) for v in vals if (v or 0) % n in wave)

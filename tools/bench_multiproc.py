@@ -5,9 +5,9 @@ artifact: one driver, one scheduler, one memory bus.  A real cluster
 scales by adding EXECUTOR PROCESSES, and the per-bucket checkpoint
 protocol (plans/checkpoint.py) is exactly the coordination layer that
 lets independent processes share one job: results are per-bucket
-dynamic-partition overwrites, audit/ledger commits are unique-file
-atomic renames, and the ledger anti-join makes any bucket partition
-of the work resumable and idempotent.
+overwrites committed under the table's manifest lock, audit/ledger
+commits are unique-file atomic renames, and the ledger anti-join
+makes any bucket partition of the work resumable and idempotent.
 
 This bench runs the SAME sf0.1 pipeline two ways on one catalog
 layout:
